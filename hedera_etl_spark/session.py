@@ -26,6 +26,17 @@ Scale notes (the same code must hold on a 1000-executor cluster at ~100 TB):
   (reference: hedera-etl-bigquery/src/main/resources/transactions-schema.json:7-10)
   and the microsecond TIMESTAMP derivation
   (reference: TransactionJsonToTableRow.java:57-58).
+- ``get_spark`` sessions commit streaming checkpoint files through
+  ``FileSystemBasedCheckpointFileManager``: a write to a temp file and an
+  atomic rename(2) on a POSIX file system, ``.crc`` files kept.  Spark's
+  default FileContext manager runs the same commit through Hadoop's
+  non-native local file system, which forks ``chmod``/``ls``/``readlink``
+  per checkpoint file when no native-hadoop library is installed
+  (docs/PERF_NOTES.md: 290 process spawns per ingest micro-batch with it,
+  107 with this one).  The FileSystem manager is only atomic where rename
+  is, so it is set for the local sessions built here, and
+  ``configure_session`` — sessions someone else built, possibly on object
+  storage — keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -58,6 +69,13 @@ RUNTIME_CONFS = {
     # executor); tune down for small containers.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
+
+
+#: local sessions only (module docstring); not in RUNTIME_CONFS
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 _CONFIGURED: "weakref.WeakSet[SparkSession]" = None  # type: ignore[assignment]
@@ -122,6 +140,7 @@ def get_spark(
         # process-local, so the delay-scheduling wait only adds task-launch
         # latency; on object-storage clusters 0 is the standard setting too
         .config("spark.locality.wait", "0")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

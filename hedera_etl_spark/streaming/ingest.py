@@ -42,11 +42,28 @@ Scale: the only state is the dedup operator's keyed store (bounded by the
 watermark) and the file-source log; parse/cast/write are embarrassingly
 parallel per batch.  Partition count of each append follows the source
 batch; AQE coalescing keeps small micro-batches from writing confetti
-files.
+files.  At the paper's 100 TPS a trigger holds a few hundred rows, so
+row latency is set by each trigger's FIXED cost, and the pipeline keeps
+that cost to the work the rows need:
+
+- the typed projection (the cast tree over the 403-line schema, the
+  validity flag, the partition and window columns) is planned once, in
+  ``_stream()``, not rebuilt per batch; ``_process_batch`` only
+  persists, filters, observes and writes;
+- the query runs no empty micro-batches (``NO_DATA_BATCHES`` is off for
+  this query only): the arrival-time watermark moves on every trigger,
+  which would otherwise buy each data batch a no-data follow-up with its
+  own writes and state-store commit;
+- ``session.get_spark`` sessions commit checkpoint files through
+  ``FileSystemBasedCheckpointFileManager`` (session.py).
+
+docs/PERF_NOTES.md has the measured per-batch breakdown.
 """
 
 from __future__ import annotations
 
+import datetime
+from collections import deque
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -55,6 +72,14 @@ from pyspark.sql.streaming import StreamingQuery
 
 from hedera_etl_spark.schema import CORRUPT_COL, parse_schema
 from hedera_etl_spark.transform import cast_to_table, corrupt_predicate, errors_projection
+
+#: per-batch entries kept in ``IngestMetrics.history`` (the totals stay
+#: exact): an always-on ingest would otherwise grow it without bound
+HISTORY_LEN = 1000
+
+#: the session conf that makes a query run a no-data micro-batch whenever
+#: its watermark moved; read by the query when it starts
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 @dataclass
@@ -68,7 +93,8 @@ class IngestMetrics:
     #: wall-clock seconds between batch processing time and the newest
     #: event time in it — the reference's end-to-end lag Distribution
     ingest_delay_sec: float | None = None
-    history: list = field(default_factory=list)
+    #: the last HISTORY_LEN batches' counts and delay
+    history: deque = field(default_factory=lambda: deque(maxlen=HISTORY_LEN))
 
 
 class IngestPipeline:
@@ -117,8 +143,11 @@ class IngestPipeline:
                 {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
             ).alias("__p"),
         )
-        if not self.dedupe_in_stream:
-            return parsed
+        if self.dedupe_in_stream:
+            parsed = self._dedupe(parsed)
+        return self._typed(parsed)
+
+    def _dedupe(self, parsed: DataFrame) -> DataFrame:
         # The dedup state is watermarked on ARRIVAL time, not event time.
         # An event-time watermark makes every stateful operator FILTER
         # rows older than the horizon — in continuous mode a late-arriving
@@ -143,6 +172,32 @@ class IngestPipeline:
             .drop("__dedup_key", "__arrival_ts")
         )
 
+    @staticmethod
+    def _typed(parsed: DataFrame) -> DataFrame:
+        """Every row's raw line, validity flag and typed table columns.
+
+        Planned once with the query, after the dedup operator (whose state
+        therefore keeps its schema): the cast tree over the full schema is
+        hundreds of expressions, and building it per batch cost ~0.1 s of
+        driver time.  Malformed rows are cast too — every leaf cast is a
+        try_cast or a guarded unbase64, so casting them cannot fail the
+        task — and ``_process_batch`` routes them by ``__bad``."""
+        # shared definition of 'invalid' with the batch path
+        # (transform.corrupt_predicate) so the two can never drift
+        flagged = parsed.select("value", corrupt_predicate("__p").alias("__bad"), "__p.*")
+        typed = cast_to_table(flagged, passthrough=("value", "__bad"))
+        truncated = F.expr("timestamp_micros(consensusTimestamp div 1000)")
+        return typed.withColumns(
+            {
+                "consensusTimestampTruncated": truncated,
+                "part_date": F.to_date(truncated),
+                # administrative column for the downstream DedupeJob's
+                # window predicates (the reference's UNIX_SECONDS filter
+                # column; `dedupe` scratch is the analogous precedent)
+                "ts_sec": F.expr("consensusTimestamp div 1000000000"),
+            }
+        )
+
     # -- per-batch processing (S2/S3/P1-P4) ----------------------------------
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
@@ -150,49 +205,37 @@ class IngestPipeline:
             if self.archive_path is not None:
                 # S5 cold archive: raw lines as text, before any parsing
                 batch_df.select("value").write.mode("append").text(self.archive_path)
-            # shared definition of 'invalid' with the batch path
-            # (transform.corrupt_predicate) so the two can never drift
-            is_bad = corrupt_predicate("__p")
-
-            valid_obs = Observation(f"ingest_valid_{batch_id}")
-            typed = cast_to_table(batch_df.filter(~is_bad).select("__p.*"))
-            typed = (
-                typed.withColumn(
-                    "consensusTimestampTruncated",
-                    F.expr("timestamp_micros(consensusTimestamp div 1000)"),
+            bad = F.col("__bad")
+            # observed BEFORE the valid-row filter, so the valid write's
+            # own pass also counts the malformed rows
+            obs = Observation(f"ingest_{batch_id}")
+            valid = (
+                batch_df.observe(
+                    obs,
+                    F.count(F.when(~bad, 1)).alias("valid"),
+                    F.count(F.when(bad, 1)).alias("errors"),
+                    F.max(F.when(~bad, F.col("consensusTimestampTruncated"))).alias(
+                        "latest_ts"
+                    ),
                 )
-                .withColumn("part_date", F.to_date("consensusTimestampTruncated"))
-                # administrative column for the downstream DedupeJob's
-                # window predicates (the reference's UNIX_SECONDS filter
-                # column; `dedupe` scratch is the analogous precedent)
-                .withColumn("ts_sec", F.expr("consensusTimestamp div 1000000000"))
+                .filter(~bad)
+                .drop("value", "__bad")
             )
-            typed = typed.observe(
-                valid_obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.max("consensusTimestampTruncated").alias("latest_ts"),
-            )
-            typed.write.mode("append").partitionBy("part_date").parquet(self.table_path)
+            valid.write.mode("append").partitionBy("part_date").parquet(self.table_path)
+            counts = obs.get
+            n_valid, n_errors, latest = counts["valid"], counts["errors"], counts["latest_ts"]
 
-            err_obs = Observation(f"ingest_errors_{batch_id}")
-            errors = batch_df.filter(is_bad).select(
-                *errors_projection(F.col("value"))
-            )
-            errors = errors.observe(err_obs, F.count(F.lit(1)).alias("rows"))
+            errors = batch_df.filter(bad).select(*errors_projection(F.col("value")))
             errors.write.mode("append").parquet(self.errors_path)
 
             m = self.metrics
-            v, e = valid_obs.get, err_obs.get
             m.batches += 1
-            m.valid_rows += v["rows"]
-            m.error_rows += e["rows"]
+            m.valid_rows += n_valid
+            m.error_rows += n_errors
             delay = None
-            if v["latest_ts"] is not None:
-                if m.latest_event_ts is None or v["latest_ts"] > m.latest_event_ts:
-                    m.latest_event_ts = v["latest_ts"]
-                import datetime
-
-                latest = v["latest_ts"]
+            if latest is not None:
+                if m.latest_event_ts is None or latest > m.latest_event_ts:
+                    m.latest_event_ts = latest
                 if latest.tzinfo is None:
                     # PySpark converts TimestampType to the DRIVER's local
                     # wall time (not the session TZ) — astimezone() on a
@@ -206,8 +249,8 @@ class IngestPipeline:
             m.history.append(
                 {
                     "batch_id": batch_id,
-                    "valid": v["rows"],
-                    "errors": e["rows"],
+                    "valid": n_valid,
+                    "errors": n_errors,
                     "ingest_delay_sec": delay,
                 }
             )
@@ -227,7 +270,20 @@ class IngestPipeline:
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        return writer.start()
+        # No empty micro-batches: the query reads NO_DATA_BATCHES from the
+        # session when it starts, so it is set around start() only and the
+        # caller's session keeps its own value.  (Not safe against another
+        # thread starting a query on the same session at the same moment.)
+        conf = self.spark.conf
+        previous = conf.get(NO_DATA_BATCHES, None)
+        conf.set(NO_DATA_BATCHES, "false")
+        try:
+            return writer.start()
+        finally:
+            if previous is None:
+                conf.unset(NO_DATA_BATCHES)
+            else:
+                conf.set(NO_DATA_BATCHES, previous)
 
     def run_to_completion(self) -> IngestMetrics:
         """Drain the input dir and wait (availableNow semantics)."""

@@ -95,11 +95,18 @@ def _struct_fields_sql(parent: str, fields: list[dict], depth: int) -> str:
     return ", ".join(parts)
 
 
-def cast_to_table(parsed: DataFrame, spec: list[dict] | None = None) -> DataFrame:
-    """Project the all-string parsed struct columns to the typed schema."""
+def cast_to_table(
+    parsed: DataFrame, spec: list[dict] | None = None, passthrough: tuple[str, ...] = ()
+) -> DataFrame:
+    """Project the all-string parsed struct columns to the typed schema.
+
+    ``passthrough`` names columns of ``parsed`` carried through unchanged,
+    ahead of the typed ones (the streaming ingest keeps its raw line and
+    validity flag next to the typed row this way)."""
     spec = spec or TRANSACTIONS_SPEC
     return parsed.selectExpr(
-        *[f"{_cast_field_sql(f['name'], f)} AS {f['name']}" for f in spec]
+        *[f"`{c}`" for c in passthrough],
+        *[f"{_cast_field_sql(f['name'], f)} AS {f['name']}" for f in spec],
     )
 
 
